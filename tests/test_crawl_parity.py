@@ -294,3 +294,24 @@ def test_fresh_restart_after_reset_does_not_resume_stale_run(spark, fixture_web,
     got = sorted((r["round"], r.depth, r.seed_idx, r.url)
                  for r in resumed.crawl_log.collect())
     assert got == oracle.crawl_order
+
+
+def test_polite_bloom_crawl_releases_its_caches(spark, fixture_web, tmp_path):
+    """run_crawl unpersists every frame it cached (web, robots rules,
+    seed frontier): a polite Bloom-mode crawl leaves the persisted-RDD
+    count where it found it, while a web the caller cached stays cached."""
+    from pyspark import StorageLevel
+
+    kw = dict(politeness_budget=3, use_robots=True, dedup_contacts=True,
+              seen_mode="bloom")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    _run(spark, fixture_web, tmp_path / "owned", **kw)
+    assert persisted().size() == before
+
+    web = fixture_web[3].cache()
+    try:
+        _run(spark, fixture_web, tmp_path / "callers", **kw)
+        assert web.storageLevel != StorageLevel.NONE
+    finally:
+        web.unpersist()

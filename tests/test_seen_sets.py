@@ -1,6 +1,8 @@
 """URL-seen set variants: exact vs Bloom vs Cuckoo agree at fixture
 scale; Cuckoo supports deletion (re-crawl)."""
 
+import os
+
 from pyspark.sql import functions as F
 
 
@@ -198,3 +200,112 @@ def test_exact_seen_compact_dedups(spark, tmp_path):
     assert s.snapshot_urls().count() == 200
     # novelty unchanged by compaction
     assert s.filter_new(batch).isEmpty()
+
+
+def _plan_nodes(spark, run):
+    """Run ``run()``; return its result and the physical-plan node names
+    of every SQL execution it started (final plans, AQE included)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        lst = store.executionsList()
+        return {lst.apply(i).executionId() for i in range(lst.size())}
+
+    before = execution_ids()
+    out = run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    names = []
+    for eid in sorted(execution_ids() - before):
+        nodes = store.planGraph(eid).allNodes()
+        names += [nodes.apply(i).name() for i in range(nodes.size())]
+    return out, names
+
+
+def test_filter_and_add_shuffles_candidates_only(spark, tmp_path):
+    """The filter state never enters the JVM: both passes run one job
+    whose only exchange is the candidates' shuffle by partition_id, with
+    no scan of the state table — and the grouped function raises no
+    pyspark type-hint inference warning."""
+    import warnings
+
+    from web_scraper_spark.operators.seen import BloomURLSeenSet
+
+    bloom = BloomURLSeenSet(spark, str(tmp_path / "plan"), num_partitions=8)
+    bloom.filter_and_add(_urls(spark, 0, 1000))
+    for insert in (False, True):
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            novel, nodes = _plan_nodes(
+                spark,
+                lambda: bloom.filter_and_add(_urls(spark, 500, 1500), insert=insert),
+            )
+        assert nodes.count("Exchange") == 1, nodes
+        assert not [n for n in nodes if n.startswith("Scan")], nodes
+        assert not [w for w in caught if "type hints" in str(w.message)]
+        assert novel.count() == 500
+
+
+def test_earlier_spark_written_state_layout_still_resolves(spark, tmp_path):
+    """Workdirs written before per-pid blob files stay resumable: a
+    Spark-written FULL dir (several pids per part file, no pid list, as
+    compact() used to write it) under an incremental Spark-written dir
+    (pids listed in blob_dir_pids) loads, filters, takes new per-pid
+    generations on top, and compacts into the new layout."""
+    from web_scraper_spark.operators.seen import BloomURLSeenSet
+
+    src = BloomURLSeenSet(spark, str(tmp_path / "src"), num_partitions=8)
+    src.filter_and_add(_urls(spark, 0, 2000))
+    full = src.table.read().select("partition_id", "bits").collect()
+    src.filter_and_add(_urls(spark, 2000, 2020))
+    newest = src.table._current_dirs()[-1]
+    delta = spark.read.parquet(newest).select("partition_id", "bits").collect()
+
+    legacy = BloomURLSeenSet(spark, str(tmp_path / "legacy"), num_partitions=8)
+    schema = "partition_id int, bits binary"
+    legacy.table.overwrite(spark.createDataFrame(full, schema).coalesce(2))
+    delta_dir = legacy.table.write_data(spark.createDataFrame(delta, schema).coalesce(1))
+    legacy.table.commit_dirs(
+        legacy.table._current_dirs() + [delta_dir],
+        extra={"blob_dir_pids": {delta_dir: sorted(r.partition_id for r in delta)}},
+    )
+
+    assert legacy.filter_and_add(_urls(spark, 0, 2020), insert=False).count() == 0
+    assert legacy.filter_and_add(_urls(spark, 2020, 2120)).count() == 100
+    assert len(legacy.table._current_dirs()) == 3
+    assert legacy.filter_and_add(_urls(spark, 0, 2120), insert=False).count() == 0
+    legacy.compact()
+    (only,) = legacy.table._current_dirs()
+    assert sorted(os.listdir(only)) == [f"pid-{p:05d}.parquet" for p in range(8)]
+    assert legacy.filter_and_add(_urls(spark, 0, 2120), insert=False).count() == 0
+    assert legacy.filter_and_add(_urls(spark, 2120, 2170)).count() == 50
+
+
+def test_retried_store_rewrites_identical_blob(spark, tmp_path):
+    """A retried task re-runs its group, possibly in another shuffle
+    order, into the same generation dir: it must leave one
+    byte-identical file per pid. Cuckoo inserts are order-sensitive at
+    high load, so this holds only because groups are sorted by hash."""
+    import functools
+
+    import pandas as pd
+
+    from web_scraper_spark.operators.seen import (
+        CuckooURLSeenSet, _cuckoo_kernel, _grouped,
+    )
+
+    rows = _urls(spark, 0, 240).select(
+        "url", F.xxhash64("url").alias("hash")
+    ).collect()
+    pdf = pd.DataFrame([tuple(r) for r in rows], columns=["url", "hash"])
+    kernel = functools.partial(
+        _cuckoo_kernel, m=64, max_kicks=CuckooURLSeenSet.MAX_KICKS,
+        insert=True, delete=False,
+    )
+    gen = tmp_path / "gen"
+    store = _grouped(kernel, {}, str(gen))
+    first = store((3,), pdf)
+    blob = (gen / "pid-00003.parquet").read_bytes()
+    second = store((3,), pdf.iloc[::-1].reset_index(drop=True))
+    assert os.listdir(gen) == ["pid-00003.parquet"]
+    assert (gen / "pid-00003.parquet").read_bytes() == blob
+    assert list(first["url"]) == list(second["url"])

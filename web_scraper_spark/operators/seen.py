@@ -12,13 +12,16 @@ Two interchangeable implementations behind ``URLSeenSet``:
   (hash, url). This is itself scalable — a sort-merge anti-join against a
   hash-partitioned table — just heavier than Bloom at the extreme tail.
   False-positive budget 0 (BASELINE.md requirement for parity runs).
-- **bloom** (bench scale): per-partition numpy bitsets persisted as
-  binary blobs in ``url_seen_bloom(partition_id, bits)``. Candidates are
-  repartitioned by ``pmod(xxhash64(url), P)`` and each partition's bitset
-  is tested/updated inside one Arrow-batched ``applyInPandas`` cogroup —
-  membership state never leaves the executors except as the updated
-  blobs. False positives drop URLs (never re-fetch), which is the
-  standard crawler trade; size the bitset for the target FP rate.
+- **bloom** (bench scale): per-partition numpy bitsets persisted as one
+  parquet blob file per partition in ``url_seen_bloom(partition_id,
+  bits)``. Only the candidates are shuffled: they are grouped by
+  ``pmod(xxhash64(url), P)`` into one ``applyInPandas`` pass, and the
+  Python worker that owns a group loads its partition's blob straight
+  from the table's files, tests/updates it, and stores the updated blob
+  itself. The filter state never enters the JVM — no state scan, no
+  state shuffle, no Arrow round trip of the bitsets. False positives
+  drop URLs (never re-fetch), which is the standard crawler trade; size
+  the bitset for the target FP rate.
 
 Both modes expose: ``filter_new(candidates) -> new_urls`` and
 ``add(urls)``; parity tests run both and assert identical output on
@@ -27,15 +30,19 @@ fixture scale (where Bloom is sized to zero collisions).
 
 from __future__ import annotations
 
+import functools
+import glob
 import os
+import random
+import re
+import uuid
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType, IntegerType, StringType, StructField, StructType,
-)
 
 from web_scraper_spark.sources.tables import SnapshotTable
 
@@ -90,30 +97,12 @@ class URLSeenSet:
         return seen.select("url").dropDuplicates(["url"])
 
 
-_BLOOM_STATE_SCHEMA = StructType(
-    [
-        StructField("partition_id", IntegerType()),
-        StructField("bits", BinaryType()),
-    ]
-)
-_BLOOM_OUT_SCHEMA = StructType(
-    [
-        StructField("kind", StringType()),  # 'url' | 'bits'
-        StructField("url", StringType()),
-        StructField("partition_id", IntegerType()),
-        StructField("bits", BinaryType()),
-    ]
-)
-
-
 def _next_scratch(root: str, keep: int = 2) -> str:
     """Allocate a scratch dir for the write-once materialization and
     garbage-collect all but the ``keep`` most recent ones (the previous
     call's returned DataFrame may still reference its dir lazily; two
     generations is the documented lifetime)."""
-    import os
     import shutil
-    import uuid
 
     base = os.path.join(root, "scratch")
     os.makedirs(base, exist_ok=True)
@@ -148,11 +137,102 @@ def _bloom_positions(hashes: np.ndarray, k: int, m: int) -> np.ndarray:
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(m)).astype(np.int64)
 
 
+# -- per-partition blob files ------------------------------------------------
+# One generation dir holds one single-row parquet file per dirty partition,
+# named by its pid; the file names ARE the dirty-pid list of the commit.
+
+_BLOB_FILE = re.compile(r"pid-(\d+)\.parquet")
+
+
+def _blob_name(pid: int) -> str:
+    return f"pid-{pid:05d}.parquet"
+
+
+def _load_blob(path: str | None, pid: int) -> bytes | None:
+    """The blob of ``pid`` from ``path`` (None: partition never stored).
+    Per-pid files hold one row; Spark-written files of the earlier
+    layout hold several partitions' rows."""
+    if path is None:
+        return None
+    with pq.ParquetFile(path) as f:
+        t = f.read(columns=["partition_id", "bits"])
+    ids = t.column("partition_id").to_pylist()
+    return t.column("bits")[ids.index(pid)].as_py()
+
+
+def _store_blob(gen_dir: str, pid: int, blob: bytes) -> None:
+    """Write ``pid``'s blob as ``gen_dir/pid-NNNNN.parquet`` via a hidden
+    tmp file + ``os.replace``: a reader sees the whole file or none, and
+    a retried task attempt overwrites the same name with the same bytes.
+    Snappy-compressed (sparse bitsets shrink well); no statistics on the
+    blob column, which would copy the blob into the footer."""
+    os.makedirs(gen_dir, exist_ok=True)
+    name = _blob_name(pid)
+    tmp = os.path.join(gen_dir, f".{name}.{uuid.uuid4().hex}")
+    table = pa.table({
+        "partition_id": pa.array([pid], pa.int32()),
+        "bits": pa.array([blob], pa.binary()),
+    })
+    pq.write_table(
+        table, tmp, compression="snappy", use_dictionary=False,
+        write_statistics=["partition_id"],
+    )
+    os.replace(tmp, os.path.join(gen_dir, name))
+
+
+def _copy_blob(gen_dir: str, item: tuple[int, str]) -> None:
+    pid, path = item
+    _store_blob(gen_dir, pid, _load_blob(path, pid))
+
+
+def _grouped(kernel, files: dict[int, str], gen_dir: str):
+    """The per-partition function of the candidate ``applyInPandas``:
+    load the partition's blob, run ``kernel(pid, blob, hashes) ->
+    (novel_mask, new_blob | None)``, store a changed blob, return the
+    novel urls. Candidates are deduplicated and sorted by (hash, url)
+    first, so a new blob is a pure function of the old blob and the
+    candidate SET — shuffle order cannot change it, and a retried task
+    rewrites identical bytes. Deliberately unannotated: pyspark infers
+    the UDF eval type from complete type hints only."""
+
+    def apply(key, pdf):
+        pid = int(key[0])
+        pdf = pdf.drop_duplicates("url").sort_values(["hash", "url"])
+        hashes = pdf["hash"].to_numpy(np.int64).view(np.uint64)
+        novel, blob = kernel(pid, _load_blob(files.get(pid), pid), hashes)
+        if blob is not None:
+            _store_blob(gen_dir, pid, blob)
+        return pd.DataFrame({"url": pdf["url"].to_numpy()[novel]})
+
+    return apply
+
+
 class _BlobStateSeenSet:
     """Shared machinery for seen sets whose state is P per-partition
-    binary blobs in a SnapshotTable (Bloom bitsets, cuckoo slot tables):
-    incremental dirty-partition commits, latest-wins reads, and the
-    compaction that collapses generations (VERDICT r4 item 5)."""
+    binary blobs in a SnapshotTable (Bloom bitsets, cuckoo slot tables).
+    Subclasses supply only the numpy kernel; this class resolves, loads,
+    stores and commits the blobs.
+
+    Per call: the driver maps pid -> latest blob file from the manifest
+    (P entries, shipped in the UDF closure); the candidates alone are
+    shuffled by ``partition_id``; each group's worker reads its blob
+    file with pyarrow and writes a changed blob as ``pid-NNNNN.parquet``
+    into the call's generation dir; the driver renames that dir into the
+    table and commits it manifest-only. Commits are INCREMENTAL (VERDICT
+    r4 item 5): only dirty partitions are written, once, and all of them
+    land under ONE manifest rename — there is no partial-state crash
+    window. Latest-wins: a pid's blob is the one in the newest current
+    dir that holds it.
+
+    Executors must see the table root as the same POSIX path as the
+    driver (local disk, or a shared/network filesystem on a cluster) —
+    the same assumption ``SnapshotTable``'s ``os.replace`` manifest
+    commits already make.
+
+    Dirs written by the earlier layout (Spark part files holding several
+    pids each, full snapshots from ``compact`` and incremental ``kind=
+    bits`` dirs listed in ``blob_dir_pids``) still resolve, so existing
+    workdirs stay resumable."""
 
     spark: SparkSession
     table: SnapshotTable
@@ -163,85 +243,118 @@ class _BlobStateSeenSet:
     def _dir_pid_map(self, manifest: dict) -> dict:
         """dir -> list[pid] for INCREMENTAL state dirs of the current
         snapshot (carried in the snapshot's extra); dirs absent from the
-        map are FULL snapshots (every partition) from compact/legacy."""
+        map are FULL snapshots (every partition) of the earlier layout."""
         cur = manifest.get("current")
         if cur is None:
             return {}
         snap = next(s for s in manifest["snapshots"] if s["id"] == cur)
         return (snap.get("extra") or {}).get(self._PIDS_KEY, {})
 
-    def _state(self) -> DataFrame:
-        """Latest-wins view, one row per partition. Dirs are read
-        NEWEST-first; an incremental dir contributes only its recorded
-        dirty pids (minus pids already claimed by a newer dir); the first
-        FULL dir contributes the remainder and shadows everything older.
-        No extra shuffle — the cogroup repartitions state regardless."""
+    def _blob_files(self) -> dict[int, str]:
+        """pid -> the file holding its latest blob; pids never stored are
+        absent. Dirs are walked NEWEST-first. A per-pid dir resolves from
+        the manifest's pid list and the file names alone; a Spark-written
+        dir of the earlier layout costs a read of its part files'
+        ``partition_id`` column, and a FULL one shadows everything older."""
         manifest = self.table._read_manifest()
-        dirs = self.table._current_dirs(manifest)
-        if not dirs:
-            return self.spark.createDataFrame([], _BLOOM_STATE_SCHEMA)
         pid_map = self._dir_pid_map(manifest)
-        frames: list[DataFrame] = []
-        claimed: set[int] = set()
-        for d in reversed(dirs):
-            df = self.spark.read.parquet(d).select("partition_id", "bits")
+        files: dict[int, str] = {}
+        for d in reversed(self.table._current_dirs(manifest)):
             pids = pid_map.get(d)
-            if pids is None:  # full snapshot dir — take the rest, stop
-                if claimed:
-                    df = df.where(~F.col("partition_id").isin(*claimed))
-                frames.append(df)
+            if pids and os.path.exists(os.path.join(d, _blob_name(pids[0]))):
+                for p in pids:
+                    files.setdefault(p, os.path.join(d, _blob_name(p)))
+                continue
+            for path in sorted(glob.glob(os.path.join(d, "*.parquet"))):
+                with pq.ParquetFile(path) as f:
+                    ids = f.read(columns=["partition_id"]).column(0)
+                for p in ids.to_pylist():
+                    files.setdefault(p, path)
+            if pids is None:
                 break
-            take = [p for p in pids if p not in claimed]
-            if take:
-                frames.append(df.where(F.col("partition_id").isin(*take)))
-                claimed.update(take)
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+        return files
 
-    def compact(self) -> None:
-        """Collapse the incremental generations into ONE full dir holding
-        the latest blob per partition (latest-wins resolved first — a
-        plain snapshot rewrite would resurrect stale generations)."""
-        if not self.table.exists():
+    def _commit_generation(self, gen_dir: str, replace: bool = False) -> None:
+        """Rename the generation dir into the table and commit it
+        manifest-only, recording its pids (read off the file names) so
+        later calls resolve them without opening anything. ``replace``:
+        the dir becomes the whole state (compaction). Crash windows match
+        append(): before the rename nothing changed; between rename and
+        manifest replace the dir is an unreferenced orphan — the table
+        still reads the old state."""
+        names = os.listdir(gen_dir) if os.path.isdir(gen_dir) else []
+        pids = sorted(
+            int(m.group(1)) for m in map(_BLOB_FILE.fullmatch, names) if m
+        )
+        if not pids:  # nothing dirty
             return
-        self.table.overwrite(self._state())
-
-
-    def _read_novel_urls(self, url_dir: str) -> DataFrame:
-        if not os.path.isdir(url_dir):  # zero novel URLs in the batch
-            return self.spark.createDataFrame([], "url string")
-        return self.spark.read.parquet(url_dir).select("url")
-
-    def _commit_dirty_bits(self, bits_dir: str) -> None:
-        """Rename the scratch bits subdir into the table and commit it
-        manifest-only, recording which pids it carries (the latest-wins
-        read needs that to shadow older generations without opening
-        them). Crash windows match append(): before the rename nothing
-        changed; between rename and manifest replace the dir is an
-        unreferenced orphan — the table still reads the old state."""
-        if not os.path.isdir(bits_dir):  # no dirty partitions
-            return
-        import pathlib
-
-        import pyarrow.parquet as pq
-
-        pids: list[int] = []
-        for f in pathlib.Path(bits_dir).glob("*.parquet"):
-            pids.extend(
-                pq.read_table(str(f), columns=["partition_id"])
-                .column("partition_id").to_pylist()
-            )
         manifest = self.table._read_manifest()
         new_dir = self.table._new_data_dir()
-        os.replace(bits_dir, new_dir)
-        pid_map = dict(self._dir_pid_map(manifest))
-        pid_map[new_dir] = sorted(pids)
-        self.table.commit_dirs(
-            self.table._current_dirs(manifest) + [new_dir],
-            extra={self._PIDS_KEY: pid_map},
+        os.replace(gen_dir, new_dir)
+        old = [] if replace else self.table._current_dirs(manifest)
+        pid_map = {
+            d: p for d, p in self._dir_pid_map(manifest).items() if d in old
+        }
+        pid_map[new_dir] = pids
+        self.table.commit_dirs(old + [new_dir], extra={self._PIDS_KEY: pid_map})
+
+    def _run(self, candidates: DataFrame, kernel) -> DataFrame:
+        """One shuffle of the candidates by ``partition_id``; each group's
+        worker applies ``kernel`` against its partition's blob and stores
+        the changed blob itself. The novel urls are materialized once in
+        a scratch dir and the dirty blobs committed before returning."""
+        files = self._blob_files()
+        scratch = _next_scratch(self.table.root)
+        gen_dir = os.path.join(scratch, "blobs")
+        url_dir = os.path.join(scratch, "urls")
+        hashed = F.xxhash64(F.col("url"))
+        cand = candidates.select(
+            "url",
+            hashed.alias("hash"),
+            F.pmod(hashed, F.lit(self.P)).cast("int").alias("partition_id"),
         )
+        (
+            cand.groupBy("partition_id")
+            .applyInPandas(_grouped(kernel, files, gen_dir), "url string")
+            .write.mode("overwrite")
+            .parquet(url_dir)
+        )
+        self._commit_generation(gen_dir)
+        return self.spark.read.schema("url string").parquet(url_dir)
+
+    def compact(self) -> None:
+        """Collapse the generations into ONE dir holding the latest blob
+        of every stored partition: a distributed pass over the pids, each
+        task loading and storing its blobs like ``filter_and_add`` does.
+        One current dir is already compact."""
+        if len(self.table._current_dirs()) <= 1:
+            return
+        items = sorted(self._blob_files().items())
+        gen_dir = os.path.join(_next_scratch(self.table.root), "blobs")
+        sc = self.spark.sparkContext
+        sc.parallelize(items, min(len(items), sc.defaultParallelism)).foreach(
+            functools.partial(_copy_blob, gen_dir)
+        )
+        self._commit_generation(gen_dir, replace=True)
+
+
+def _bloom_kernel(pid, blob, hashes, *, m: int, k: int, insert: bool):
+    """Bloom test (and set, when ``insert``) over one partition's bitset;
+    vectorized. A fresh URL always sets >=1 new bit, so any fresh URL
+    under ``insert`` dirties the blob."""
+    bits = (
+        np.frombuffer(blob, dtype=np.uint8) if blob is not None
+        else np.zeros(m // 8, dtype=np.uint8)
+    )
+    pos = _bloom_positions(hashes, k, m)
+    bytes_idx = pos >> 3
+    masks = (1 << (pos & 7)).astype(np.uint8)
+    fresh = ~((bits[bytes_idx] & masks) == masks).all(axis=1)
+    if not (insert and fresh.any()):
+        return fresh, None
+    bits = bits.copy()
+    np.bitwise_or.at(bits, bytes_idx[fresh].ravel(), masks[fresh].ravel())
+    return fresh, bits.tobytes()
 
 
 class BloomURLSeenSet(_BlobStateSeenSet):
@@ -277,90 +390,19 @@ class BloomURLSeenSet(_BlobStateSeenSet):
         the common paths (counting, enqueueing plain URLs) skip that
         second shuffle entirely.
 
-        State commits are INCREMENTAL (VERDICT r4 item 5): merge emits a
-        bitset blob only for DIRTY partitions (>=1 new bit set), the
-        scratch write splits urls/bits via partitionBy, and the bits
-        subdir is renamed into the table + committed manifest-only — per
-        batch the state I/O is O(touched partitions) written ONCE, never
-        a second whole-table rewrite. At the 10^10 design point (1024 x
-        1 GiB bitsets) a batch touching 5% of partitions commits ~50 GiB
-        instead of 2 TiB. All dirty blobs land in ONE dir + ONE manifest
-        rename, so the commit stays atomic — there is no partial-bitset
-        crash window."""
-        m, k = self.m, self.k
-        do_insert = insert
+        The call is EAGER: one Spark write runs inside it, and an insert
+        has committed by the time it returns — callers need no action on
+        the result to make it durable. The result reads the novel urls
+        back from the call's scratch dir (valid until two later calls).
 
-        cand = candidates.withColumn("hash", F.xxhash64(F.col("url"))).withColumn(
-            "partition_id", F.pmod(F.col("hash"), F.lit(self.P)).cast("int")
-        )
-        state = self._state()
-
-        def merge(key, cand_iter: pd.DataFrame, state_df: pd.DataFrame) -> pd.DataFrame:
-            pid = int(key[0])
-            if len(state_df) and state_df["bits"].iloc[0] is not None:
-                bits = np.frombuffer(state_df["bits"].iloc[0], dtype=np.uint8).copy()
-            else:
-                bits = np.zeros(m // 8, dtype=np.uint8)
-            frames = []
-            dirty = False
-            if len(cand_iter):
-                # fully vectorized: dedup batch, test all, then set bits
-                cand_iter = cand_iter.drop_duplicates("url")
-                hashes = cand_iter["hash"].to_numpy().astype(np.int64).view(np.uint64)
-                pos = _bloom_positions(hashes, k, m)
-                bytes_idx = pos >> 3
-                masks = (1 << (pos & 7)).astype(np.uint8)
-                present = ((bits[bytes_idx] & masks) == masks).all(axis=1)
-                fresh = ~present
-                if do_insert and fresh.any():
-                    np.bitwise_or.at(
-                        bits, bytes_idx[fresh].ravel(), masks[fresh].ravel()
-                    )
-                    dirty = True  # a fresh URL always sets >=1 new bit
-                out_urls = cand_iter["url"].to_numpy()[fresh]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "kind": "url",
-                            "url": out_urls,
-                            "partition_id": pid,
-                            "bits": None,
-                        }
-                    )
-                )
-            if dirty:
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "kind": ["bits"],
-                            "url": [None],
-                            "partition_id": [pid],
-                            "bits": [bits.tobytes()],
-                        }
-                    )
-                )
-            if not frames:
-                return pd.DataFrame(
-                    {"kind": [], "url": [], "partition_id": [], "bits": []}
-                )
-            return pd.concat(frames, ignore_index=True)
-
-        result = (
-            cand.groupBy("partition_id")
-            .cogroup(state.groupBy("partition_id"))
-            .applyInPandas(merge, _BLOOM_OUT_SCHEMA)
-        )
-        # single materialization, split by kind at write time: urls and
-        # dirty bitsets land in sibling subdirs of one scratch write —
-        # caching 10^7 url rows in executor memory and recomputing the
-        # cogroup are both avoided, and the bits subdir can be committed
-        # by RENAME instead of a second Spark write.
-        scratch = _next_scratch(self.table.root)
-        result.write.mode("overwrite").partitionBy("kind").parquet(scratch)
-        if do_insert:
-            self._commit_dirty_bits(os.path.join(scratch, "kind=bits"))
-        return self._read_novel_urls(os.path.join(scratch, "kind=url"))
-
+        State I/O is O(touched partitions): only DIRTY partitions (>=1
+        new bit set) write a blob, once, and all of them commit under one
+        manifest rename. At the 10^10 design point (1024 x 1 GiB
+        bitsets) a batch touching 5% of partitions writes ~50 GiB instead
+        of 2 TiB, and reads only the blobs of partitions it has
+        candidates for."""
+        kernel = functools.partial(_bloom_kernel, m=self.m, k=self.k, insert=insert)
+        return self._run(candidates, kernel)
 
 
 def _cuckoo_fp(h: np.ndarray) -> np.ndarray:
@@ -375,6 +417,67 @@ def _cuckoo_indices(h: np.ndarray, fp: np.ndarray, m: int):
     alt = (fp.astype(np.uint64) * np.uint64(0x5BD1E995)) % mu
     i2 = ((i1.astype(np.uint64) ^ alt) % mu).astype(np.int64)
     return i1, i2
+
+
+def _cuckoo_kernel(
+    pid, blob, hashes, *, m: int, max_kicks: int, insert: bool, delete: bool
+):
+    """Cuckoo lookup (vectorized), then per-item deletes or inserts with
+    a bounded eviction walk. The walk's randomness is seeded by the pid
+    and items arrive sorted, so the result is deterministic."""
+    slots = (
+        np.frombuffer(blob, dtype=np.uint16).reshape(m, 4).copy()
+        if blob is not None
+        else np.zeros((m, 4), dtype=np.uint16)
+    )
+    fp = _cuckoo_fp(hashes)
+    i1, i2 = _cuckoo_indices(hashes, fp, m)
+    # vectorized membership: fp present in bucket i1 or i2
+    present = (
+        (slots[i1] == fp[:, None]).any(axis=1)
+        | (slots[i2] == fp[:, None]).any(axis=1)
+    )
+    changed = False
+    if delete:
+        for row in np.nonzero(present)[0]:
+            for b in (i1[row], i2[row]):
+                hit = np.nonzero(slots[b] == fp[row])[0]
+                if len(hit):
+                    slots[b, hit[0]] = 0
+                    changed = True
+                    break
+        return np.zeros(len(hashes), dtype=bool), slots.tobytes() if changed else None
+    fresh = ~present
+    rng = random.Random(pid)
+    for row in np.nonzero(fresh)[0] if insert else ():
+        f = fp[row]
+        placed = False
+        for b in (i1[row], i2[row]):
+            empty = np.nonzero(slots[b] == 0)[0]
+            if len(empty):
+                slots[b, empty[0]] = f
+                placed = changed = True
+                break
+        if not placed:
+            b = i1[row]
+            path: list[tuple[int, int]] = []
+            for _ in range(max_kicks):
+                s = rng.randrange(4)
+                path.append((b, s))
+                f, slots[b, s] = slots[b, s], f
+                b = int((np.uint64(b) ^ ((np.uint64(f) * np.uint64(0x5BD1E995)) % np.uint64(m))) % np.uint64(m))
+                empty = np.nonzero(slots[b] == 0)[0]
+                if len(empty):
+                    slots[b, empty[0]] = f
+                    placed = changed = True
+                    break
+            if not placed:
+                # kick exhaustion: UNDO the eviction chain so no
+                # previously-stored fingerprint is lost — only the NEW
+                # item passes through unstored (fail-open)
+                for b_undo, s_undo in reversed(path):
+                    f, slots[b_undo, s_undo] = slots[b_undo, s_undo], f
+    return fresh, slots.tobytes() if changed else None
 
 
 class CuckooURLSeenSet(_BlobStateSeenSet):
@@ -413,115 +516,17 @@ class CuckooURLSeenSet(_BlobStateSeenSet):
         self, candidates: DataFrame, delete: bool = False, insert: bool = True
     ) -> DataFrame:
         """delete=False: returns novel urls + (when ``insert``) stores
-        them — ``insert=False`` is the crash-safe test-only pass (see
-        BloomURLSeenSet.filter_and_add). delete=True: removes the given
-        urls from the filter instead. State commits are incremental, like
-        Bloom's: only partitions whose slot table actually CHANGED (an
-        insert landed or a deletion zeroed a slot) emit a blob."""
-        m, P, max_kicks = self.m, self.P, self.MAX_KICKS
-        do_insert = insert
-        # plain module functions only — a bound method would drag `self`
-        # (and its SparkSession) into the executor closure
-        fingerprint = _cuckoo_fp
-        indices = _cuckoo_indices
-
-        cand = candidates.withColumn("hash", F.xxhash64(F.col("url"))).withColumn(
-            "partition_id", F.pmod(F.col("hash"), F.lit(P)).cast("int")
+        them — ``insert=False`` is the crash-safe test-only pass; eager
+        like BloomURLSeenSet.filter_and_add. delete=True: removes the
+        given urls from the filter instead. State commits are
+        incremental, like Bloom's: only partitions whose slot table
+        actually CHANGED (an insert landed or a deletion zeroed a slot)
+        store a blob."""
+        kernel = functools.partial(
+            _cuckoo_kernel, m=self.m, max_kicks=self.MAX_KICKS,
+            insert=insert, delete=delete,
         )
-        state = self._state()
-
-        def merge(key, cand_iter: pd.DataFrame, state_df: pd.DataFrame) -> pd.DataFrame:
-            pid = int(key[0])
-            if len(state_df) and state_df["bits"].iloc[0] is not None:
-                slots = np.frombuffer(state_df["bits"].iloc[0], dtype=np.uint16).reshape(m, 4).copy()
-            else:
-                slots = np.zeros((m, 4), dtype=np.uint16)
-            frames = []
-            changed = False
-            if len(cand_iter):
-                cand_iter = cand_iter.drop_duplicates("url")
-                h = cand_iter["hash"].to_numpy().astype(np.int64).view(np.uint64)
-                fp = fingerprint(h)
-                i1, i2 = indices(h, fp, m)
-                # vectorized membership: fp present in bucket i1 or i2
-                present = (
-                    (slots[i1] == fp[:, None]).any(axis=1)
-                    | (slots[i2] == fp[:, None]).any(axis=1)
-                )
-                if delete:
-                    for row in np.nonzero(present)[0]:
-                        for b in (i1[row], i2[row]):
-                            hit = np.nonzero(slots[b] == fp[row])[0]
-                            if len(hit):
-                                slots[b, hit[0]] = 0
-                                changed = True
-                                break
-                    novel_urls = np.array([], dtype=object)
-                else:
-                    fresh = np.nonzero(~present)[0]
-                    import random as _random
-
-                    rng = _random.Random(pid)
-                    for row in fresh if do_insert else ():
-                        f = fp[row]
-                        placed = False
-                        for b in (i1[row], i2[row]):
-                            empty = np.nonzero(slots[b] == 0)[0]
-                            if len(empty):
-                                slots[b, empty[0]] = f
-                                placed = changed = True
-                                break
-                        if not placed:
-                            b = i1[row]
-                            path: list[tuple[int, int]] = []
-                            for _ in range(max_kicks):
-                                s = rng.randrange(4)
-                                path.append((b, s))
-                                f, slots[b, s] = slots[b, s], f
-                                b = int((np.uint64(b) ^ ((np.uint64(f) * np.uint64(0x5BD1E995)) % np.uint64(m))) % np.uint64(m))
-                                empty = np.nonzero(slots[b] == 0)[0]
-                                if len(empty):
-                                    slots[b, empty[0]] = f
-                                    placed = changed = True
-                                    break
-                            if not placed:
-                                # kick exhaustion: UNDO the eviction chain
-                                # so no previously-stored fingerprint is
-                                # lost — only the NEW item passes through
-                                # unstored (fail-open)
-                                for b_undo, s_undo in reversed(path):
-                                    f, slots[b_undo, s_undo] = slots[b_undo, s_undo], f
-                    novel_urls = cand_iter["url"].to_numpy()[fresh]
-                if len(novel_urls):
-                    frames.append(
-                        pd.DataFrame(
-                            {"kind": "url", "url": novel_urls,
-                             "partition_id": pid, "bits": None}
-                        )
-                    )
-            if changed:
-                frames.append(
-                    pd.DataFrame(
-                        {"kind": ["bits"], "url": [None], "partition_id": [pid],
-                         "bits": [slots.tobytes()]}
-                    )
-                )
-            if not frames:
-                return pd.DataFrame(
-                    {"kind": [], "url": [], "partition_id": [], "bits": []}
-                )
-            return pd.concat(frames, ignore_index=True)
-
-        result = (
-            cand.groupBy("partition_id")
-            .cogroup(state.groupBy("partition_id"))
-            .applyInPandas(merge, _BLOOM_OUT_SCHEMA)
-        )
-        scratch = _next_scratch(self.table.root)
-        result.write.mode("overwrite").partitionBy("kind").parquet(scratch)
-        if do_insert or delete:
-            self._commit_dirty_bits(os.path.join(scratch, "kind=bits"))
-        return self._read_novel_urls(os.path.join(scratch, "kind=url"))
+        return self._run(candidates, kernel)
 
     def delete(self, urls: DataFrame) -> None:
         self.filter_and_add(urls, delete=True)

@@ -29,6 +29,7 @@ import os
 import time
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -308,8 +309,12 @@ def run_crawl(
             "(parity mode never reads the seen set mid-crawl)"
         )
 
-    if web is not None:
+    # frames this call persists for the whole crawl; released before it
+    # returns. A ``web`` the caller had already cached stays cached.
+    own_cache: list[DataFrame] = []
+    if web is not None and web.storageLevel == StorageLevel.NONE:
         web = web.cache()
+        own_cache.append(web)
 
     # robots rule table (graft; SURVEY.md §4 custom #5). Hermetic mode
     # reads the /robots.txt rows straight off the synthetic web; a live
@@ -326,6 +331,7 @@ def run_crawl(
         ).select("host", "body")
         robots_rules = build_rules_table(robots_pages, robots_agent).cache()
         robots_rules.count()
+        own_cache.append(robots_rules)
 
     def _ensure_robots(df: DataFrame) -> None:
         """Live robots pre-pass: fetch ``http://host/robots.txt`` once per
@@ -506,9 +512,10 @@ def run_crawl(
                 # checkpointed frontier first; duplicates collapse under
                 # the final dropDuplicates (ADVICE r1)
                 discovered_t.append(state.select("url"))
-                seen.filter_and_add(state.select("url")).count()
+                seen.filter_and_add(state.select("url"))
             else:
                 seen.add(state.select("url"))
+        state.unpersist()
     else:
         # fresh run: clear any stale state from a previous run in this dir
         # (incl. the live robots cache — rules may have changed upstream)
@@ -522,6 +529,7 @@ def run_crawl(
                 else _seed_frontier(spark, seeds),
                 priority_expr,
             ).cache()
+        seed_frames = [seeds_df]
         if ingest_sitemaps and robots_rules is not None and web is not None:
             # graft: robots-advertised sitemaps seed extra depth-0 pages,
             # attributed to the seed of the SAME host (hosts with no seed
@@ -576,6 +584,7 @@ def run_crawl(
             seeds_df = seeds_df.unionByName(
                 _with_priority(extra, priority_expr)
             ).cache()
+            seed_frames.append(seeds_df)
         if dedup_contacts:
             if approx_seen:
                 # discovered-log append BEFORE the filter insert: a crash
@@ -584,7 +593,7 @@ def run_crawl(
                 # the filter block re-discovery while the log lost the
                 # urls forever (ADVICE r1)
                 discovered_t.append(seeds_df.select("url"))
-                seen.filter_and_add(seeds_df.select("url")).count()
+                seen.filter_and_add(seeds_df.select("url"))
             else:
                 seen.add(seeds_df.select("url"))
         else:
@@ -592,6 +601,8 @@ def run_crawl(
                 discovered_t.append(seeds_df.select("url"))
         with _phase("stage_depth0"):
             active_dirs = _stage_depth(seeds_df)
+        for df in seed_frames:
+            df.unpersist()
         staged_dirs = []
         round_no = 0
         depth_now = 0
@@ -831,7 +842,7 @@ def run_crawl(
                     # dropDuplicates; ADVICE r1 — the old order silently
                     # dropped a crashed round's discoveries from url_seen)
                     discovered_t.append(discovered.select("url"))
-                    seen.filter_and_add(discovered.select("url")).count()
+                    seen.filter_and_add(discovered.select("url"))
                 else:
                     seen.add(discovered.select("url"))
             discovered.unpersist()
@@ -944,6 +955,8 @@ def run_crawl(
             d.dropDuplicates(["url"]) if d is not None
             else spark.createDataFrame([], "url string")
         )
+    for df in own_cache:
+        df.unpersist()
     return CrawlResult(
         crawl_log=log_df.select("round", "depth", "seed_idx", "url"),
         url_seen=url_seen_df,
